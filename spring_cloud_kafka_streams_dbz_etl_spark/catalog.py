@@ -135,10 +135,6 @@ def fan_out_vectorized(
     return df.repartition(n)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
     """Register every table as a temp view for the SQL API — the same
     names the DuckDB oracles use, so any oracle SQL in this repo is also

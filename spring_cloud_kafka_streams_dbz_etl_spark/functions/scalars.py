@@ -81,6 +81,8 @@ def eval_once(col: Column) -> Column:
     consumer reads the attribute. The guard survives the same four
     optimizer attacks no_pushdown documents; the no-otherwise branch is
     unreachable (uuid() length is never <= -1), so the value and its
-    type/nullability are unchanged. Costs ~0.5 us/row.
+    type are unchanged — but a CASE with no ELSE is always NULLABLE,
+    whatever the input's nullability. Exactly one codec evaluation per
+    row is pinned in tests/test_plans.py. Costs ~0.5 us/row.
     """
     return F.when(F.length(F.expr("uuid()")) > -1, col)

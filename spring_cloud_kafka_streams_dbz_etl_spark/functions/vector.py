@@ -87,7 +87,7 @@ def cosine_from_dot(dp: Column, na: Column, nb: Column, decimals: int = 6) -> Co
     plus both norms). ``dp``/``na``/``nb`` must be the exact folds the
     expression form would compute — the kernel's ascending-d accumulate
     is bit-identical to ``aggregate(zip_with(...))`` and its norms are
-    the accumulator diagonal — so try_divide/round see bit-identical
+    the same fold over each vector — so try_divide/round see bit-identical
     operands and every threshold/rank decision is unchanged (r18; the
     r17 norm hoist left ONE interpreted fold per pair, this removes it)."""
     return F.round(safe_div(dp, na * nb), decimals)

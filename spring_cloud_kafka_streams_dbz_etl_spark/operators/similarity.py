@@ -1292,91 +1292,101 @@ def kmeans_cells(
     return out
 
 
-def blocked_cosine_pairs(
-    e: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    cell_col: str = "label",
-    vec_col: str = "v",
-) -> DataFrame:
-    """All within-cell cosine pairs >= threshold, as ONE applyInPandas
-    pass per blocking cell — the scale form of the blocked self-join:
-    each vector shuffles ONCE (the groupBy), and the cell's full pair
-    grid accumulates as ``dim`` sequential rank-1 numpy updates instead
-    of a join that carries BOTH d-double arrays on every pair row and
-    evaluates an interpreted HOF fold per pair. Measured
-    (tools/measure_cosine_pairs.py, 16k vectors in 1.6k-row cells):
-    join-HOF 58.3 s vs 3.4 s here — 17x, widening quadratically with
-    cell size, zero membership diffs.
+# Rows per pair-kernel block: bounds per-cell memory at block·|cell|, and
+# undirected blocks skip the columns left of the block (the lower
+# triangle), which a whole-cell block would fold and throw away.
+PAIR_BLOCK_ROWS = 128
 
-    Bit-compatibility: acc[i,j] += V[i,d]*V[j,d] in ascending d is the
-    SAME multiply-then-accumulate sequence as the HOF dot's left fold,
-    and the norms are the accumulator's diagonal, so every raw cosine
-    equals the expression form's double exactly; ROUND(6) and the
-    threshold decision stay JVM-side. Returns
-    (vec_a, vec_b, cell_col, cos_sim) with vec_a < vec_b.
 
-    Memory: the accumulator is |cell|^2 doubles — cells are bounded by
-    the blocking scheme's design (that's what keeps pair counts
-    sub-quadratic); for outsized cells chunk the row axis, same
-    fold."""
+def cell_pair_batches(
+    ids,
+    vecs,
+    cell,
+    names: list[str],
+    directed: bool,
+    min_cos: float | None,
+) -> Iterator:
+    """The pair record batches of ONE cell: :func:`pair_dots_arrow`'s
+    per-cell kernel. ``ids`` is the cell's int64 id array in ascending
+    order, ``vecs`` the aligned Arrow list<double> array, ``cell`` the
+    cell key scalar and ``names`` the six output column names. Rows are
+    processed ``PAIR_BLOCK_ROWS`` at a time against the whole cell, so the
+    accumulator and every yielded batch hold at most ``PAIR_BLOCK_ROWS``·m
+    entries however hot the cell is."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    cell_t = e.schema[cell_col].dataType.simpleString()
-
-    def cell_pairs(pdf):
-        import pandas as pd
-
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {"vec_a": [], "vec_b": [], cell_col: [], "__cos": []}
+    m = len(ids)
+    if m < 2:
+        return
+    # class per row: its length, or -1 for a NULL vector / NULL element
+    # (every pair it is in folds to NULL, as zip_with pads and poisons)
+    lens = pc.list_value_length(vecs).fill_null(-1).to_numpy()
+    flat = pc.list_flatten(vecs)
+    null_el = flat.is_null().to_numpy(zero_copy_only=False)
+    parents = pc.list_parent_indices(vecs).to_numpy()
+    cls = np.where(np.bincount(parents[null_el], minlength=m) > 0, -1, lens)
+    starts = np.concatenate([[0], np.cumsum(np.maximum(lens, 0))[:-1]])
+    vals = flat.to_numpy(zero_copy_only=False)
+    norms = np.full(m, np.nan)
+    classes = []
+    for length in np.unique(cls[cls >= 0]):
+        pos = np.flatnonzero(cls == length)
+        Vt = vals[starts[pos][None, :] + np.arange(length)[:, None]]
+        # the norm is dot(v, v) by the same fold; sqrt is correctly
+        # rounded in IEEE, matching the JVM l2_norm
+        nsq = np.zeros(len(pos))
+        for d in range(length):
+            nsq += Vt[d] * Vt[d]
+        norms[pos] = np.sqrt(nsq)
+        classes.append((length, pos, Vt))
+    norm_null = cls < 0
+    for i0 in range(0, m, PAIR_BLOCK_ROWS):
+        i1 = min(i0 + PAIR_BLOCK_ROWS, m)
+        # undirected pairs have id_b > id_a, so sit right of the block
+        c0 = 0 if directed else i0 + 1
+        dp = np.zeros((i1 - i0, m - c0))
+        valid = np.zeros(dp.shape, dtype=bool)
+        for length, pos, Vt in classes:
+            rsel = (pos >= i0) & (pos < i1)
+            csel = pos >= c0
+            if not rsel.any() or not csel.any():
+                continue
+            A, B = Vt[:, rsel], Vt[:, csel]
+            acc = np.zeros((A.shape[1], B.shape[1]))
+            for d in range(length):
+                # ascending-d left fold for every pair at once; one IEEE
+                # multiply + one IEEE add per step, exactly the
+                # zip_with/aggregate sequence
+                acc += np.outer(A[d], B[d])
+            ix = np.ix_(pos[rsel] - i0, pos[csel] - c0)
+            dp[ix] = acc
+            valid[ix] = True
+        ia, ib = ids[i0:i1, None], ids[None, c0:]
+        bi, bj = np.nonzero(ia != ib if directed else ia < ib)
+        dpv, ok = dp[bi, bj], valid[bi, bj]
+        gi, gj = bi + i0, bj + c0
+        if min_cos is not None:
+            # conservative pre-filter only: ROUND(6) can lift a value by
+            # up to 5e-7, and NaN cosines and NULL dots are kept, so the
+            # JVM-side decision on the rounded value is unchanged
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = dpv / (norms[gi] * norms[gj])
+            keep = ~(cos < min_cos - 1e-6) | ~ok
+            dpv, ok, gi, gj = dpv[keep], ok[keep], gi[keep], gj[keep]
+        if len(gi):
+            yield pa.record_batch(
+                [
+                    pa.array(ids[gi]),
+                    pa.array(ids[gj]),
+                    pa.repeat(cell, len(gi)),
+                    pa.array(dpv, mask=~ok),
+                    pa.array(norms[gi], mask=norm_null[gi]),
+                    pa.array(norms[gj], mask=norm_null[gj]),
+                ],
+                names=names,
             )
-        V = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-        ids = pdf[id_col].to_numpy()
-        acc = np.zeros((n, n))
-        for d in range(V.shape[1]):
-            col = V[:, d]
-            # ascending-d left fold for every pair at once; the diagonal
-            # accumulates the squared norms with the same fold
-            acc += np.outer(col, col)
-        norms = np.sqrt(np.diag(acc))
-        iu, ju = np.triu_indices(n, k=1)
-        cos = acc[iu, ju] / (norms[iu] * norms[ju])
-        # margin pre-filter only; the exact decision happens JVM-side on
-        # the rounded value, identical to the expression form. ROUND(6)
-        # can lift a value by up to 5e-7, so the margin must exceed that.
-        # NaN-preserving (negated complement): a zero-norm vector yields
-        # cos = NaN here, which the Arrow handoff converts to NULL
-        # (pandas float NaN is the missing-value sentinel), so the
-        # JVM-side >= threshold DROPS such pairs — exactly what the
-        # DuckDB oracle does (x / 0.0 is NULL there, and NULL fails the
-        # WHERE). Deep-fuzzed in tools/deep_fuzz.py::fuzz_blocked_cosine
-        # and pinned in tests/test_zero_norm_cosine.py. Dropping is also
-        # the sane scale semantics: a NaN that compared high (Spark
-        # orders NaN above every double) would pair one zero embedding
-        # with the entire cell.
-        keep = ~(cos < threshold - 1e-6)
-        va, vb = ids[iu[keep]], ids[ju[keep]]
-        lo, hi = np.minimum(va, vb), np.maximum(va, vb)
-        return pd.DataFrame(
-            {
-                "vec_a": lo,
-                "vec_b": hi,
-                cell_col: pdf[cell_col].iloc[0],
-                "__cos": cos[keep],
-            }
-        )
-
-    out = e.groupBy(cell_col).applyInPandas(
-        cell_pairs, f"vec_a long, vec_b long, {cell_col} {cell_t}, __cos double"
-    )
-    return out.select(
-        "vec_a",
-        "vec_b",
-        cell_col,
-        F.round(F.col("__cos"), 6).alias("cos_sim"),
-    ).filter(F.col("cos_sim") >= threshold)
 
 
 def pair_dots_arrow(
@@ -1385,121 +1395,82 @@ def pair_dots_arrow(
     cell_col: str = "label",
     vec_col: str = "v",
     directed: bool = False,
+    min_cos: float | None = None,
 ) -> DataFrame:
     """All within-cell pair DOT PRODUCTS plus both vectors' norms, as one
-    mapInArrow pass per cell — :func:`blocked_cosine_pairs` for consumers
-    that must preserve the exact NULL/NaN algebra of the expression form
-    (the brute-force contract: q_triangle_count keeps NaN pairs because
-    NaN compares largest in both engines; q_knn_graph ranks NULL cosines
-    last and NaN first). The pandas handoff cannot express that — pandas
-    float NaN IS the missing-value sentinel — so this variant stays in
-    Arrow end to end: NaN data flows through numpy untouched and NULLs
-    are explicit validity bits.
+    mapInArrow pass per cell — the package's one within-cell pair
+    generator (q_embedding_cosine_dup, q_triangle_count and the kNN
+    family). It stays in Arrow end to end, so the exact NULL/NaN algebra
+    of the expression form survives (q_triangle_count keeps NaN pairs
+    because NaN compares largest in both engines; q_knn_graph ranks NULL
+    cosines last and NaN first): NaN data flows through numpy untouched
+    and NULLs are explicit validity bits. Rows with a NULL id or a NULL
+    cell key are dropped first, as the oracles' inner joins drop them.
 
-    Emits (``{id}_a``, ``{id}_b``, __dp, __na, __nb) for every ordered
-    pair id_a < id_b of the cell (both directions when ``directed``);
-    the caller applies the SAME JVM tail as the join form —
-    ``round(try_divide(__dp, __na*__nb), 6)`` — so every division,
+    Emits (``{id}_a``, ``{id}_b``, ``cell_col``, __dp, __na, __nb) for
+    every pair id_a < id_b of the cell (both directions when
+    ``directed``); the caller applies the SAME JVM tail as the join form
+    — ``round(try_divide(__dp, __na*__nb), 6)`` — so every division,
     zero-norm NULL, ROUND and threshold/rank decision is made by the
     identical expression on bit-identical operands:
 
     - __dp accumulates ``V[i,d]*V[j,d]`` in ascending d with one IEEE
       add per step — the expression form's ``aggregate(zip_with(...))``
       left fold exactly (products first, then sequential adds from 0.0).
-    - __na/__nb are ``sqrt`` of the accumulator's diagonal — the same
-      fold over the same array as ``l2_norm``, so the caller no longer
-      computes or carries norms at all.
+    - __na/__nb are ``sqrt`` of each vector's fold with itself — the
+      same fold over the same array as ``l2_norm``, so the caller no
+      longer computes or carries norms at all.
     - A vector that is NULL, has a NULL element, or whose length differs
       from its partner's folds to a NULL dot in the expression form
       (zip_with pads with NULLs, one NULL poisons the fold); such pairs
       emit __dp NULL here. Same-length degenerate pairs (including two
       empty vectors: fold over nothing = 0.0) go through the matrix.
 
-    Scale: identical shuffle to the groupBy form (each vector moves once
-    to its cell); the accumulator is |class|^2 doubles per cell, bounded
-    by the blocking scheme, chunked over the row axis past
-    ``block_rows``. Row-for-row parity with the join-HOF form is pinned
-    in tests/test_plans.py and fuzz-swept (incl. NaN/zero/ragged rows)
-    in tools/deep_fuzz.py.
+    ``min_cos`` is a conservative in-kernel pre-filter for callers that
+    keep ``cosine >= min_cos`` only: a pair is dropped when its numpy
+    cosine is below ``min_cos - 1e-6``; NaN cosines and NULL dots are
+    kept. The caller's JVM filter still makes the decision.
+
+    Scale: one shuffle (each vector moves once to its cell); the
+    partition's input is sorted by (cell, id) in Arrow and each cell is
+    emitted ``PAIR_BLOCK_ROWS`` rows at a time (:func:`cell_pair_batches`),
+    so memory per cell is O(block·|cell|). Row-for-row parity with the
+    join-HOF form is pinned in tests/test_plans.py and fuzz-swept (incl.
+    NULL id/cell, NaN, zero, ragged rows) in tools/deep_fuzz.py.
     """
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
+    cell_t = e.schema[cell_col].dataType.simpleString()
+    names = [f"{id_col}_a", f"{id_col}_b", cell_col, "__dp", "__na", "__nb"]
     out_schema = (
-        f"{id_col}_a long, {id_col}_b long, __dp double, __na double, __nb double"
+        f"{id_col}_a long, {id_col}_b long, {cell_col} {cell_t}, "
+        "__dp double, __na double, __nb double"
     )
-    block_rows = 2048
 
     def cell_dots(batches):
-        # buffer the partition (cells are complete per partition after
-        # the repartition below), grouped by cell key
-        by_cell: dict = {}
-        for batch in batches:
-            ids = batch.column(id_col)
-            cells = batch.column(cell_col)
-            vecs = batch.column(vec_col)
-            for r in range(batch.num_rows):
-                key = cells[r].as_py()
-                by_cell.setdefault(key, []).append(
-                    (ids[r].as_py(), vecs[r])
-                )
-        for rows in by_cell.values():
-            rows.sort(key=lambda t: t[0])  # id_a < id_b == index order
-            m = len(rows)
-            if m < 2:
-                continue
-            ids = np.array([t[0] for t in rows], dtype=np.int64)
-            # classify: NULL / NULL-element vectors -> class None (all
-            # their pairs fold to NULL); others by length
-            cls = np.empty(m, dtype=object)
-            vec_np: list = [None] * m
-            for r, (_, v) in enumerate(rows):
-                if not v.is_valid:
-                    cls[r] = None
-                    continue
-                arr = v.values  # pyarrow double array of this list cell
-                if arr.null_count:
-                    cls[r] = None
-                    continue
-                vec_np[r] = arr.to_numpy(zero_copy_only=False)
-                cls[r] = len(vec_np[r])
-            dp = np.zeros((m, m))
-            valid = np.zeros((m, m), dtype=bool)
-            norms = np.full(m, np.nan)
-            norms_valid = np.zeros(m, dtype=bool)
-            for length in {c for c in cls if c is not None}:
-                idx = np.flatnonzero(cls == length)
-                V = (
-                    np.stack([vec_np[r] for r in idx])
-                    if length
-                    else np.zeros((len(idx), 0))
-                )
-                for i0 in range(0, len(idx), block_rows):
-                    sel = idx[i0 : i0 + block_rows]
-                    acc = np.zeros((len(sel), len(idx)))
-                    for d in range(length):
-                        # ascending-d left fold for every pair at once;
-                        # one IEEE multiply + one IEEE add per step,
-                        # exactly the zip_with/aggregate sequence
-                        acc += np.outer(V[i0 : i0 + block_rows, d], V[:, d])
-                    dp[np.ix_(sel, idx)] = acc
-                valid[np.ix_(idx, idx)] = True
-                # the diagonal IS dot(v, v) by the same fold; sqrt is
-                # correctly rounded in IEEE, matching the JVM l2_norm
-                norms[idx] = np.sqrt(np.diag(dp[np.ix_(idx, idx)]))
-                norms_valid[idx] = True
-            iu, ju = np.triu_indices(m, k=1)
-            if directed:
-                iu, ju = np.concatenate([iu, ju]), np.concatenate([ju, iu])
-            yield pa.record_batch(
-                [
-                    pa.array(ids[iu]),
-                    pa.array(ids[ju]),
-                    pa.array(dp[iu, ju], mask=~valid[iu, ju]),
-                    pa.array(norms[iu], mask=~norms_valid[iu]),
-                    pa.array(norms[ju], mask=~norms_valid[ju]),
-                ],
-                names=[f"{id_col}_a", f"{id_col}_b", "__dp", "__na", "__nb"],
+        # cells are complete per partition after the repartition below
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        t = (
+            t.filter(pc.and_(pc.is_valid(t[id_col]), pc.is_valid(t[cell_col])))
+            .sort_by([(cell_col, "ascending"), (id_col, "ascending")])
+            .combine_chunks()
+        )
+        n = t.num_rows
+        if n < 2:
+            return
+        cells = t.column(cell_col).chunk(0)
+        ids = t.column(id_col).to_numpy().astype(np.int64)
+        vecs = t.column(vec_col).chunk(0)
+        change = pc.not_equal(cells.slice(1), cells.slice(0, n - 1))
+        edges = [0, *(np.flatnonzero(change.to_numpy(zero_copy_only=False)) + 1), n]
+        for s, f in zip(edges[:-1], edges[1:]):
+            yield from cell_pair_batches(
+                ids[s:f], vecs.slice(s, f - s), cells[s], names, directed, min_cos
             )
 
     return (

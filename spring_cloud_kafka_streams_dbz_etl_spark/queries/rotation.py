@@ -473,6 +473,28 @@ _ROUND_17 = frozenset({
     "s_kafka_txn_sink", "s_python_sink", "s_source_mix_drift"
 })
 
+# Keys of CORRECTNESS_r18.json whose row was GREEN (50/50) — the full
+# round-18 window: all 45 CHANGED_SINCE_CHECK re-fronts of the round-18
+# tier plus 5 least-recently-checked fills, zero red rows.
+_ROUND_18 = frozenset({
+    "q_ann_coverage_curve", "q_ann_nprobe_curve", "q_ann_recall",
+    "q_bm25", "q_bpe_capacity", "q_bpe_train", "q_cdc_envelope_parse",
+    "q_compaction_plan", "q_dedup_survivors", "q_dedup_threshold_sweep",
+    "q_dim_time_travel", "q_dup_cluster_stats", "q_dup_clusters",
+    "q_embedding_spectrum", "q_index_health", "q_knn_graph",
+    "q_knn_graph_ivf", "q_knn_hubness", "q_knn_mutual", "q_knob_plan",
+    "q_leakage_split", "q_linear_probe", "q_linear_probe_pca",
+    "q_media_decode", "q_multimodal_schema", "q_range_join",
+    "q_semantic_clusters", "q_simhash_near_dup", "q_triangle_count",
+    "q_vocab_growth", "q_zone_map_skip", "q_zorder_layout",
+    "s_ann_index_maintain", "s_ann_serve", "s_backfill_then_tail",
+    "s_cdc_multiplex", "s_cdc_pipeline", "s_cdc_pipeline_orders",
+    "s_chained_agg", "s_dim_delete", "s_dim_upsert", "s_dlq_reprocess",
+    "s_dlq_split", "s_idempotent_sink", "s_linear_probe_online",
+    "s_minhash_incremental", "s_offset_reset", "s_session_window",
+    "s_stream_outer_join", "s_window_topk"
+})
+
 CHECKED_BY_ROUND: dict[int, frozenset[str]] = {
     1: _ROUND_1,
     2: _ROUND_2,
@@ -491,6 +513,7 @@ CHECKED_BY_ROUND: dict[int, frozenset[str]] = {
     15: _ROUND_15,
     16: _ROUND_16,
     17: _ROUND_17,
+    18: _ROUND_18,
 }
 
 # Queries whose IMPLEMENTATION changed materially since their last green
@@ -708,64 +731,26 @@ CHECKED_BY_ROUND: dict[int, frozenset[str]] = {
 # Round 17's 39 entries all re-verified green AT HEAD in r17
 # (CORRECTNESS_r17.json 50/50) and are cleared in the same change that
 # records CHECKED_BY_ROUND[17] (ADVICE r8's process rule).
-# Round-18 entries (the second optimization round; enumerated by the
-# tools/plan_stamps.py --diff restamp at head plus the r17 stale tier):
-# - The 10 r17 CLOSURE-ONLY tier queries + q_ann_recall (VERDICT r17
-#   what's-wrong #1 / next-round #1): changed in r17 without a fresh
-#   driver row, re-fronted here regardless of whether r18 touched them
-#   again.
-# - local_rows sweep (VERDICT r17 #6): the 14 control-plane
-#   createDataFrame(list) relations now build via catalog.local_rows —
-#   plan/src changes on q_dedup_threshold_sweep, q_range_join,
-#   q_vocab_growth, q_bpe_capacity, q_bpe_train, q_linear_probe,
-#   q_dim_time_travel, q_ann_nprobe_curve, q_ann_coverage_curve,
-#   q_embedding_spectrum, q_knob_plan, q_linear_probe_pca,
-#   s_window_topk, s_linear_probe_online.
-# - connected_components restructure (size-aware loop confs, persist
-#   edge cache, probe labelling): q_dup_clusters, q_leakage_split,
-#   q_dup_cluster_stats, q_dedup_survivors, q_semantic_clusters,
-#   s_minhash_incremental.
-# - pair_dots_arrow kernel (the blocked self-join's per-pair HOF fold
-#   moved into one Arrow pass per cell): q_triangle_count, q_knn_graph,
-#   q_knn_hubness, q_knn_mutual, q_knn_graph_ivf.
-# - CDC parse single-eval (eval_once on from_json) + parsed-batch
-#   cache: q_cdc_envelope_parse, s_cdc_pipeline, s_cdc_pipeline_orders,
-#   s_idempotent_sink, s_dlq_split, s_dlq_reprocess, s_offset_reset,
-#   s_backfill_then_tail, s_cdc_multiplex, s_dim_upsert, s_dim_delete.
-# - q_bm25 tf-cache drop (the q_tfidf A/B twin, deferred from r17) and
-#   q_simhash_near_dup's bounded md5 memo (VERDICT r17 #3).
-# r18 restamp adjudication: q_decontaminate diffed as the KNOWN
-# RewriteDistinctAggregates gid-order process variant (src unchanged,
-# tools/plan_stamps.py::PROCESS_VARIANT) — no re-front.
-# Zero tier = these 45 (no never-checked queries remain) <= 50; the
-# least-recently-checked tail fills the window to 50.
+# Round 18's 45 entries (the r17 closure-only tier + q_ann_recall, the
+# local_rows sweep, the connected_components restructure, the
+# pair_dots_arrow kernel, the CDC single-eval parse, q_bm25) all
+# re-verified green AT HEAD in r18 (CORRECTNESS_r18.json 50/50) and are
+# cleared in the same change that records CHECKED_BY_ROUND[18].
+# Round-19 entries: exactly the queries whose tools/plan_stamps.py
+# stamp (SPARK_GRAFT_CPUS=32, the committed stamps' environment) moved
+# in the one-pair-kernel change. pair_dots_arrow is now the only
+# within-cell pair generator: q_embedding_cosine_dup moved off the
+# deleted applyInPandas generator (and q_semantic_clusters, which
+# consumes its pairs, moved closure-only), q_triangle_count passes the
+# min_cos pre-filter, the four kNN queries share one edge-plan helper,
+# and the kernel drops NULL id/cell rows and emits per row block.
+# q_embedding_dq moved src-only (a docstring naming the deleted
+# operator).
 CHANGED_SINCE_CHECK: frozenset[str] = frozenset(
     {
-        # r17 closure-only tier + q_ann_recall (stale driver rows)
-        "q_index_health", "s_ann_index_maintain", "s_ann_serve",
-        "s_chained_agg", "s_session_window", "s_stream_outer_join",
-        "q_ann_recall",
-        # r17 stale AND re-touched in r18
-        "q_simhash_near_dup", "q_semantic_clusters",
-        "q_linear_probe_pca", "q_embedding_spectrum",
-        # local_rows sweep
-        "q_dedup_threshold_sweep", "q_range_join", "q_vocab_growth",
-        "q_bpe_capacity", "q_bpe_train", "q_linear_probe",
-        "q_dim_time_travel", "q_ann_nprobe_curve", "q_ann_coverage_curve",
-        "q_knob_plan", "s_window_topk", "s_linear_probe_online",
-        # connected_components restructure
-        "q_dup_clusters", "q_leakage_split", "q_dup_cluster_stats",
-        "q_dedup_survivors", "s_minhash_incremental",
-        # pair_dots_arrow kernel
-        "q_triangle_count", "q_knn_graph", "q_knn_hubness",
-        "q_knn_mutual", "q_knn_graph_ivf",
-        # CDC parse single-eval + parsed-batch cache
-        "q_cdc_envelope_parse", "s_cdc_pipeline", "s_cdc_pipeline_orders",
-        "s_idempotent_sink", "s_dlq_split", "s_dlq_reprocess",
-        "s_offset_reset", "s_backfill_then_tail", "s_cdc_multiplex",
-        "s_dim_upsert", "s_dim_delete",
-        # q_bm25 tf-cache drop
-        "q_bm25",
+        "q_embedding_cosine_dup", "q_semantic_clusters", "q_triangle_count",
+        "q_knn_graph", "q_knn_hubness", "q_knn_graph_ivf", "q_knn_mutual",
+        "q_embedding_dq",
     }
 )
 

@@ -20,7 +20,11 @@ from ..functions.vector import (
     safe_div,
     to_double,
 )
-from ..operators.similarity import brute_force_topk, hyperplane_lsh_pairs
+from ..operators.similarity import (
+    brute_force_topk,
+    hyperplane_lsh_pairs,
+    pair_dots_arrow,
+)
 from ..session import tune
 from . import cache_scoped, query, round_half_up6
 
@@ -121,16 +125,15 @@ def q_embedding_cosine_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (blocking), keep pairs >= threshold. Cell blocking keeps the pair count
     at sum(|cell|^2) instead of |corpus|^2.
 
-    Pair generation runs as ONE applyInPandas pass per cell
-    (operators/similarity.py::blocked_cosine_pairs) since r6: each
-    vector shuffles once and the cell's pair grid accumulates as dim
-    sequential rank-1 numpy updates — measured 17x over the self-join
-    that carried both 64-double arrays on every pair row
-    (tools/measure_cosine_pairs.py), with the SAME ascending-d fold,
-    JVM-side ROUND(6) and threshold, so decisions are identical.
+    Pair generation runs as ONE Arrow pass per cell
+    (operators/similarity.py::pair_dots_arrow): each vector shuffles
+    once and the cell's pair grid accumulates as dim sequential rank-1
+    numpy updates, with the SAME ascending-d fold as the self-join that
+    carried both 64-double arrays on every pair row. The kernel's
+    ``min_cos`` pre-filter only drops pairs clearly below the threshold;
+    the JVM-side ROUND(6) and threshold make the decision, so decisions
+    are identical.
     """
-    from ..operators.similarity import blocked_cosine_pairs
-
     tune(spark)
     # finite vectors only (functions/vector.py::has_nan): candidate
     # generation must exclude corrupt embeddings — NaN compares largest,
@@ -140,8 +143,17 @@ def q_embedding_cosine_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(~has_nan(F.col("embedding")))
         .select("vec_id", "label", to_double(F.col("embedding")).alias("v"))
     )
-    return blocked_cosine_pairs(e, threshold=COSINE_DUP_MIN).select(
-        "vec_a", "vec_b", "label", "cos_sim"
+    return (
+        pair_dots_arrow(e, min_cos=COSINE_DUP_MIN)
+        .select(
+            F.col("vec_id_a").alias("vec_a"),
+            F.col("vec_id_b").alias("vec_b"),
+            "label",
+            cosine_from_dot(F.col("__dp"), F.col("__na"), F.col("__nb")).alias(
+                "cos_sim"
+            ),
+        )
+        .filter(F.col("cos_sim") >= COSINE_DUP_MIN)
     )
 
 
@@ -841,7 +853,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedges, closing semi); no driver state. Reference analog: none (the
     reference has no graph surface)."""
     from ..operators.graph import triangle_enumerate
-    from ..operators.similarity import pair_dots_arrow
 
     tune(spark)
     # Pair generation is ONE Arrow pass per label cell (r18,
@@ -849,15 +860,16 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell's full pair grid accumulates as dim sequential rank-1 numpy
     # updates — the r17 norm hoist left one interpreted HOF fold per
     # PAIR in the join condition (~30 s summed task time at sf0.1); the
-    # kernel's ascending-d fold is bit-identical and the norms are its
-    # diagonal, so the JVM-side cosine_from_dot sees bit-identical
-    # operands and the pair set cannot change (1.12M-pair fuzz incl.
-    # NaN/zero/NULL/ragged rows: tools/measure_pairdots.py).
+    # kernel's ascending-d fold is bit-identical and the norms are the
+    # same fold over each vector, so the JVM-side cosine_from_dot sees
+    # bit-identical operands and the pair set cannot change (pair-kernel
+    # fuzz incl. NaN/zero/NULL/ragged rows: tools/deep_fuzz.py). min_cos
+    # only pre-drops pairs clearly below the threshold.
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
     pairs = cache_scoped(
-        pair_dots_arrow(e, id_col="vec_id", cell_col="label", vec_col="v")
+        pair_dots_arrow(e, min_cos=TRI_COS_MIN)
         .filter(
             cosine_from_dot(F.col("__dp"), F.col("__na"), F.col("__nb"))
             >= TRI_COS_MIN
@@ -870,6 +882,34 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 KNN_K = 3
+
+
+def _knn_edges(e: DataFrame, cell_col: str = "label") -> DataFrame:
+    """(src, dst, cos_sim, rank): every vector's KNN_K nearest
+    within-cell neighbours by rounded cosine, ties on neighbour id — the
+    kNN family's shared edge plan. Directed pair generation is ONE Arrow
+    pass per cell (operators/similarity.py::pair_dots_arrow; see
+    q_triangle_count — same kernel, same bit-parity fuzz): the kernel
+    emits every (src, dst) pair with its fold dot and both norms, and
+    the JVM expression below makes the identical rounded-cosine decision
+    the join form made. NULL-cosine pairs (zero norms, degenerate
+    vectors) are still emitted so they rank LAST exactly as in the
+    expression form."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), F.col("dst").asc())
+    return (
+        pair_dots_arrow(e, cell_col=cell_col, directed=True)
+        .select(
+            F.col("vec_id_a").alias("src"),
+            F.col("vec_id_b").alias("dst"),
+            cosine_from_dot(F.col("__dp"), F.col("__na"), F.col("__nb")).alias(
+                "cos_sim"
+            ),
+        )
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= KNN_K)
+    )
 
 
 @query(
@@ -904,36 +944,11 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut is a rank window partitioned by source vector, which shares the
     shuffle key of the pair join's left side. Directed edges: (a->b)
     ranked within a's list, independently of (b->a)."""
-    from ..operators.similarity import pair_dots_arrow
-
     tune(spark)
-    # Directed pair generation as ONE Arrow pass per label cell (r18,
-    # pair_dots_arrow; see q_triangle_count — same kernel, same
-    # bit-parity fuzz): the kernel emits every (src, dst) pair with its
-    # fold dot and both norms, and the JVM expression below makes the
-    # identical rounded-cosine decision the join form made. NULL-cosine
-    # pairs (zero norms, degenerate vectors) are still emitted so they
-    # rank LAST exactly as in the expression form.
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), F.col("dst").asc())
-    return (
-        pair_dots_arrow(
-            e, id_col="vec_id", cell_col="label", vec_col="v", directed=True
-        )
-        .select(
-            F.col("vec_id_a").alias("src"),
-            F.col("vec_id_b").alias("dst"),
-            cosine_from_dot(
-                F.col("__dp"), F.col("__na"), F.col("__nb")
-            ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= KNN_K)
-    )
+    return _knn_edges(e)
 
 
 @query(
@@ -985,31 +1000,10 @@ def q_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     from pyspark.sql import Window
 
-    from ..operators.similarity import pair_dots_arrow
-
-    # directed pair generation via the one-Arrow-pass-per-cell kernel
-    # (r18, see q_knn_graph — same kernel, same bit-parity fuzz)
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
-    w = Window.partitionBy("src").orderBy(
-        F.col("cos_sim").desc(), F.col("dst").asc()
-    )
-    knn = (
-        pair_dots_arrow(
-            e, id_col="vec_id", cell_col="label", vec_col="v", directed=True
-        )
-        .select(
-            F.col("vec_id_a").alias("src"),
-            F.col("vec_id_b").alias("dst"),
-            cosine_from_dot(
-                F.col("__dp"), F.col("__na"), F.col("__nb")
-            ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select("src", "dst")
-    )
+    knn = _knn_edges(e).select("src", "dst")
     indeg = (
         e.select("vec_id")
         .join(knn, e.vec_id == knn.dst, "left")
@@ -1086,33 +1080,13 @@ def q_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import kmeans_cells
 
     tune(spark)
-    from pyspark.sql import Window
-
-    from ..operators.similarity import pair_dots_arrow
-
     emb = fan_out_vectorized(table(spark, sf_dir, "embeddings"), spark)
     e = emb.select("vec_id", to_double(F.col("embedding")).alias("v"))
     cells = kmeans_cells(emb).select("vec_id", F.col("cell").cast("int").alias("cell"))
-    # directed pair generation via the one-Arrow-pass-per-cell kernel
-    # (r18, see q_knn_graph): the trained IVF cell is the blocking key;
-    # the single pass replaced the cached two-sided self-join, so the
-    # cell-tagged relation no longer needs a cache or carried norms
-    blocked = e.join(cells, "vec_id")
-    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), F.col("dst").asc())
-    return (
-        pair_dots_arrow(
-            blocked, id_col="vec_id", cell_col="cell", vec_col="v", directed=True
-        )
-        .select(
-            F.col("vec_id_a").alias("src"),
-            F.col("vec_id_b").alias("dst"),
-            cosine_from_dot(
-                F.col("__dp"), F.col("__na"), F.col("__nb")
-            ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= KNN_K)
-    )
+    # the trained IVF cell is the blocking key of the shared kNN edge
+    # plan; the single pass replaced the cached two-sided self-join, so
+    # the cell-tagged relation needs no cache or carried norms
+    return _knn_edges(e.join(cells, "vec_id"), cell_col="cell")
 
 
 @query(
@@ -1159,32 +1133,12 @@ def q_knn_mutual(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reversed key — edge-sized, never corpus-squared. The canonical
     a<b fold halves the output without a distinct pass."""
     tune(spark)
-    from pyspark.sql import Window
-
-    from ..operators.similarity import pair_dots_arrow
-
-    # directed pair generation via the one-Arrow-pass-per-cell kernel
-    # (r18, see q_knn_graph); the kNN edge relation stays cached — the
-    # reciprocity self-join below consumes it twice
+    # the kNN edge relation stays cached — the reciprocity self-join
+    # below consumes it twice
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
-    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), F.col("dst").asc())
-    knn = cache_scoped(
-        pair_dots_arrow(
-            e, id_col="vec_id", cell_col="label", vec_col="v", directed=True
-        )
-        .select(
-            F.col("vec_id_a").alias("src"),
-            F.col("vec_id_b").alias("dst"),
-            cosine_from_dot(
-                F.col("__dp"), F.col("__na"), F.col("__nb")
-            ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= KNN_K)
-        .select("src", "dst", "cos_sim", "rank")
-    )
+    knn = cache_scoped(_knn_edges(e))
     rev = knn.select(
         F.col("dst").alias("src"),
         F.col("src").alias("dst"),
@@ -2940,7 +2894,7 @@ def q_embedding_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding data-quality audit (r13) — the hygiene gate BEFORE any
     index build or dedup pass touches the vectors: per label, counts of
     zero-norm vectors (undefined cosine — the NULL-drop contract
-    blocked_cosine_pairs pins), declared-width mismatches (a silent
+    q_embedding_cosine_dup pins), declared-width mismatches (a silent
     upstream re-embed), and non-finite components (NaN/Inf poison every
     distance), plus the norm envelope (min/max/avg) whose drift says
     the embedding model or its normalization changed. The embedding

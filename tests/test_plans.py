@@ -1148,42 +1148,177 @@ def test_pq_adc_arrow_equals_expr_form(spark, sf_smoke):
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, cell
 
 
-def test_blocked_cosine_pairs_equals_join_form(spark, sf_smoke):
-    """The per-cell Arrow pair generator must agree with the join-HOF
-    form row-for-row (ids, cells, rounded cosines) — the bit-compatible
-    guarantee the r6 swap rests on — and plan as ONE groupBy exchange
-    feeding FlatMapGroupsInPandas."""
+# degenerate rows for the pair kernel, in fixture cells 0 and 1: NULL id,
+# NULL label, NULL vector, NULL element, NaN, zero-norm, ragged, empty
+_DIRTY_PAIR_ROWS = [
+    (None, 0, [0.5] * 64),
+    (90001, None, [0.5] * 64),
+    (90002, 0, None),
+    (90003, 0, [None] + [0.5] * 63),
+    (90004, 1, [float("nan")] + [0.5] * 63),
+    (90005, 1, [0.0] * 64),
+    (90006, 0, [0.5] * 32),
+    (90007, 0, [0.5] * 32),
+    (90008, 1, []),
+    (90009, 1, []),
+]
+
+
+def test_pair_dots_arrow_equals_join_form(spark, sf_smoke):
+    """The per-cell Arrow pair kernel must agree with the join-HOF form
+    row-for-row (ids, cells, rounded cosines, NULLs and NaNs) —
+    undirected with the ``min_cos`` pre-filter and directed with no
+    threshold, over the fixture plus degenerate rows — and plan as ONE
+    exchange feeding the MapInArrow node."""
     from pyspark.sql import functions as F
 
     from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
     from spring_cloud_kafka_streams_dbz_etl_spark.functions.vector import (
         cosine,
+        cosine_from_dot,
         to_double,
     )
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
-        blocked_cosine_pairs,
+        pair_dots_arrow,
     )
     from spring_cloud_kafka_streams_dbz_etl_spark.plans import explain_str
 
     e = table(spark, sf_smoke, "embeddings").select(
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
-    arrow = blocked_cosine_pairs(e, threshold=0.35).select(
-        "vec_a", "vec_b", "label", "cos_sim"
-    )
-    text = explain_str(arrow, mode="simple")
-    assert "FlatMapGroupsInPandas" in text, text[:2000]
-    assert text.count("Exchange") == 1, text[:2000]
+    e = e.unionByName(spark.createDataFrame(_DIRTY_PAIR_ROWS, e.schema))
     a = e.select(F.col("vec_id").alias("vec_a"), "label", F.col("v").alias("va"))
     b = e.select(F.col("vec_id").alias("vec_b"), "label", F.col("v").alias("vb"))
-    join_form = (
-        a.join(b, "label")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", "label", cosine(F.col("va"), F.col("vb")).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.35)
+    for directed, min_cos in ((False, 0.35), (True, None)):
+        arrow = pair_dots_arrow(e, directed=directed, min_cos=min_cos).select(
+            F.col("vec_id_a").alias("vec_a"),
+            F.col("vec_id_b").alias("vec_b"),
+            "label",
+            cosine_from_dot(F.col("__dp"), F.col("__na"), F.col("__nb")).alias(
+                "cos_sim"
+            ),
+        )
+        text = explain_str(arrow, mode="simple")
+        assert "MapInArrow" in text, text[:2000]
+        assert text.count("Exchange") == 1, text[:2000]
+        join_form = (
+            a.join(b, "label")
+            .filter(
+                (F.col("vec_a") != F.col("vec_b"))
+                if directed
+                else (F.col("vec_a") < F.col("vec_b"))
+            )
+            .select(
+                "vec_a", "vec_b", "label", cosine(F.col("va"), F.col("vb")).alias("cos_sim")
+            )
+        )
+        if min_cos is not None:
+            arrow = arrow.filter(F.col("cos_sim") >= min_cos)
+            join_form = join_form.filter(F.col("cos_sim") >= min_cos)
+        assert arrow.exceptAll(join_form).count() == 0, directed
+        assert join_form.exceptAll(arrow).count() == 0, directed
+
+
+def _left_fold_dot(a, b):
+    """The join-HOF form's dot in plain Python: NULL for a NULL vector,
+    a NULL element or a length mismatch, else an ascending left fold."""
+    if a is None or b is None or None in a or None in b or len(a) != len(b):
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def test_pair_kernel_hot_cell_emits_bounded_batches():
+    """A cell larger than ``PAIR_BLOCK_ROWS`` is emitted one row block at
+    a time: no yielded batch exceeds PAIR_BLOCK_ROWS·m rows, and across
+    the block boundaries every emitted __dp/__na/__nb is bit-identical to
+    a plain left fold, degenerate rows included (NULL vector, NULL
+    element, NaN, zero, ragged and empty rows on both sides of a
+    boundary). Undirected with and without ``min_cos``, and directed."""
+    import math
+
+    import numpy as np
+    import pyarrow as pa
+
+    from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
+        PAIR_BLOCK_ROWS,
+        cell_pair_batches,
     )
-    assert arrow.exceptAll(join_form).count() == 0
-    assert join_form.exceptAll(arrow).count() == 0
+
+    m = 300
+    assert m > 2 * PAIR_BLOCK_ROWS
+    names = ["vec_id_a", "vec_id_b", "label", "__dp", "__na", "__nb"]
+    rng = np.random.default_rng(7)
+    rows = rng.uniform(-1, 1, (m, 8)).tolist()
+    rows[5][3] = None
+    rows[130] = None
+    rows[260][0] = float("nan")
+    for i in (200, 256):
+        rows[i] = [0.0] * 8
+    for i in (127, 128, 290):
+        rows[i] = rows[i][:4]
+    for i in (40, 299):
+        rows[i] = []
+    ids = np.arange(m, dtype=np.int64) * 3
+    vecs = pa.array(rows, type=pa.list_(pa.float64()))
+    norms = [
+        None if v is None or None in v else math.sqrt(_left_fold_dot(v, v))
+        for v in rows
+    ]
+    ref = {
+        (int(ids[i]), int(ids[j])): (_left_fold_dot(rows[i], rows[j]), norms[i], norms[j])
+        for i in range(m)
+        for j in range(m)
+        if i != j
+    }
+    for directed, min_cos in ((False, None), (False, 0.35), (True, None)):
+        batches = list(
+            cell_pair_batches(ids, vecs, pa.scalar(4), names, directed, min_cos)
+        )
+        assert max(b.num_rows for b in batches) <= PAIR_BLOCK_ROWS * m
+        got = {}
+        for b in batches:
+            assert set(b.column(2).to_pylist()) == {4}
+            for a, c, dp, na, nb in zip(
+                *(b.column(k).to_pylist() for k in (0, 1, 3, 4, 5))
+            ):
+                got[(a, c)] = (dp, na, nb)
+        assert len(got) == sum(b.num_rows for b in batches)
+        for pair, vals in got.items():
+            assert pair[0] != pair[1] if directed else pair[0] < pair[1]
+            assert repr(vals) == repr(ref[pair]), pair
+        want = {p for p in ref if directed or p[0] < p[1]}
+        if min_cos is None:
+            assert len(batches) == -(-m // PAIR_BLOCK_ROWS)
+            assert set(got) == want
+        else:
+            # the pre-filter is conservative: every pair the JVM filter
+            # could keep is emitted
+            for pair in want - set(got):
+                dp, na, nb = ref[pair]
+                assert dp is not None and na * nb != 0, pair
+                cos = dp / (na * nb)
+                assert not math.isnan(cos) and round(cos, 6) < min_cos, pair
+
+
+def test_cdc_parse_plan_evaluates_from_json_once(spark):
+    """The CDC envelope codec runs ONCE per row: eval_once's guard keeps
+    Catalyst from inlining the parsed alias into each of the three
+    envelope filters and the projected fields (the unguarded plan
+    carried one from_json per consumer)."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.plans import explain_str
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
+        parse_event_envelopes,
+    )
+
+    raw = spark.createDataFrame(
+        [("1", '{"op": "c", "after": {"id": 1}}')], "key string, value string"
+    )
+    text = explain_str(parse_event_envelopes(raw), mode="simple")
+    physical = text[text.index("== Physical Plan ==") :]
+    assert physical.count("from_json(") == 1, physical
 
 
 def test_kmeans_assign_arrow_equals_expr(spark, sf_smoke):

@@ -18,7 +18,7 @@ import pytest
 from spring_cloud_kafka_streams_dbz_etl_spark.queries import rotation
 
 
-CURRENT_ROUND = 17
+CURRENT_ROUND = 18
 WINDOW = 50
 STALENESS_BAR = 6
 
@@ -33,22 +33,19 @@ def registered() -> list[str]:
 def test_prior_round_deferrals_front_the_window(registered):
     order = rotation.rotation_order(registered)
     fronted = set(order[:WINDOW])
-    # The r18 zero tier is exactly CHANGED_SINCE_CHECK (277/277 queries
-    # carry a green row after r17, so no never-checked names remain):
-    # the 11 r17 stale-changed queries (closure-only tier + q_ann_recall,
-    # VERDICT r17 next-round #1) plus every query the r18 optimization
-    # round changed materially (plan-stamp restamp enumeration). All of
-    # them must front for fresh driver rows.
+    # The r19 zero tier is exactly CHANGED_SINCE_CHECK (all 45 r18
+    # re-fronts went green in CORRECTNESS_r18.json and were cleared, and
+    # no never-checked queries remain): the queries whose plan stamp
+    # moved when pair_dots_arrow became the one within-cell pair kernel.
+    # All of them must front for fresh driver rows.
     for name in sorted(rotation.CHANGED_SINCE_CHECK):
-        assert name in fronted, f"{name} must front the r18 window"
+        assert name in fronted, f"{name} must front the r19 window"
         assert name not in rotation.DEFERRED_NEW
-    # and the stale-11 specifically are in that tier (the round's
-    # verification-gap closure — regression-pinned by name)
+    # and the six re-planned pair-kernel consumers specifically are in
+    # that tier (regression-pinned by name)
     for name in (
-        "q_simhash_near_dup", "q_semantic_clusters", "q_index_health",
-        "q_linear_probe_pca", "q_embedding_spectrum",
-        "s_ann_index_maintain", "s_ann_serve", "s_chained_agg",
-        "s_session_window", "s_stream_outer_join", "q_ann_recall",
+        "q_embedding_cosine_dup", "q_triangle_count", "q_knn_graph",
+        "q_knn_hubness", "q_knn_graph_ivf", "q_knn_mutual",
     ):
         assert name in rotation.CHANGED_SINCE_CHECK, name
 

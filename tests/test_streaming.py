@@ -801,18 +801,28 @@ def test_state_sources_partition_parallel_at_1e5_keys(spark):
     tools/measure_state.py carries the wall-clock version of claim 2 at
     1e6 keys (time per changefeed batch tracks change count while the
     store size is constant)."""
+    import math
     import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
-    from spring_cloud_kafka_streams_dbz_etl_spark.session import stream_tune, tune
+    from spring_cloud_kafka_streams_dbz_etl_spark.session import (
+        STATE_KEYS_PER_PARTITION,
+        stream_tune,
+        tune,
+    )
 
     keys = 120_000
     touched = 1_000
     stream_tune(spark, keys)
     planned = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert planned == 5  # ceil(120k / 25k)
+    # stream_tune's formula at the live parallelism: ceil(120k / 25k) = 5
+    # instances, floored at 4 and capped at max(parallelism, 4)
+    par = spark.sparkContext.defaultParallelism
+    assert planned == min(max(4, math.ceil(keys / STATE_KEYS_PER_PARTITION)), max(par, 4))
+    if par >= 5:
+        assert planned > 4  # the key count, not the floor, sizes the store
     name = f"big_{uuid.uuid4().hex[:8]}"
     src = tempfile.mkdtemp(prefix="bigstate_src")
     ckpt = tempfile.mkdtemp(prefix="bigstate_ckpt")

@@ -14,8 +14,10 @@ Covered (operator → invariant):
 - interval_overlap   grid-cell join == quadratic bruteforce
 - pq_encode/adc      Arrow forms == retained JVM expression twins across
                         random (subspaces, k, dim) with forced ties
-- blocked_cosine     per-cell Arrow fold == join-HOF form, incl. the
-                        zero-norm NULL-drop path
+- pair_dots_arrow    per-cell Arrow fold == join-HOF form, bit-level,
+                        for every min_cos pre-filter, undirected and
+                        directed, incl. NULL id/label/vector/element,
+                        NaN, zero-norm, empty and ragged rows
 - kmeans_cells       use_arrow=True == False end-to-end (ties via
                         duplicate/grid vectors)
 - event_pattern      registered conditional-last plan == per-user
@@ -203,60 +205,86 @@ def fuzz_pq_twins(spark) -> None:
     print(f"pq twins: {max(1, N // 6)} cases OK")
 
 
-def fuzz_blocked_cosine(spark) -> None:
-    """blocked_cosine_pairs (per-cell Arrow rank-1 fold) == the join-HOF
-    form it replaced, on random cells with forced zero-norm vectors.
-    Zero-norm pairs must be DROPPED on both sides: the Arrow handoff
-    turns numpy NaN into NULL (this fuzzer is what first caught that —
-    the docstring used to claim the pairs were kept as NaN), and the
-    DuckDB oracle's x/0.0 is NULL, so NULL-drop is the pinned
-    contract (tests/test_zero_norm_cosine.py)."""
+def _pair_row(i: int, dim: int) -> tuple:
+    """One (vec_id, label, v) row for the pair-kernel fuzz: mostly
+    corpus-shaped, with the degenerate rows the dirty-data contract pins
+    — NULL id, NULL label, NULL vector, NULL element, NaN component,
+    zero norm, empty and ragged vectors."""
+    label = rng.randint(0, 2)
+    roll = rng.random()
+    if roll < 0.03:
+        return None, label, _random_vec(dim)
+    if roll < 0.06:
+        return i, None, _random_vec(dim)
+    if roll < 0.09:
+        return i, label, None
+    v = _random_vec(dim)
+    if roll < 0.12:
+        v[rng.randrange(dim)] = None
+    elif roll < 0.15:
+        v[rng.randrange(dim)] = float("nan")
+    elif roll < 0.18:
+        v = []
+    elif roll < 0.21:
+        v = v[: dim // 2]
+    return i, label, v
+
+
+def fuzz_pair_kernel(spark) -> None:
+    """pair_dots_arrow (the one within-cell pair kernel) == the join-HOF
+    form, bit-level on the rounded cosine (repr: NULL, NaN and every
+    double distinct), for every ``min_cos`` pre-filter, undirected and
+    directed, on random cells with the degenerate-row matrix. NULL ids
+    and NULL labels must drop as the inner join drops them; zero-norm
+    pairs carry a NULL cosine (try_divide), which a threshold drops —
+    the DuckDB oracle's x/0.0 is NULL too (tests/test_zero_norm_cosine.py)."""
     from spring_cloud_kafka_streams_dbz_etl_spark.functions.vector import (
-        dot,
-        l2_norm,
-        to_double,
+        cosine,
+        cosine_from_dot,
     )
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
-        blocked_cosine_pairs,
+        pair_dots_arrow,
     )
 
-    def null_cosine(a, b):
-        # The bare cosine() twin throws DIVIDE_BY_ZERO under ANSI for a
-        # zero-norm vector; the operator's actual semantics (pinned in
-        # tests/test_zero_norm_cosine.py) yield NULL there — numpy NaN
-        # becomes NULL across the Arrow handoff — and the JVM-side >=
-        # then DROPS the pair, same as the DuckDB oracle's x/0.0→NULL.
-        # Model that: a lazy CASE whose zero-denominator branch is NULL.
-        denom = l2_norm(a) * l2_norm(b)
-        return F.when(denom != 0, F.round(dot(a, b) / denom, 6))
-
-    for i in range(max(1, N // 6)):
-        dim = rng.choice([3, 8])
-        n = rng.randint(2, 80)
-        rows = [(j, rng.randint(0, 2), _random_vec(dim)) for j in range(n)]
-        df = spark.createDataFrame(
-            rows, "vec_id long, label long, embedding array<double>"
-        ).select("vec_id", "label", to_double(F.col("embedding")).alias("v"))
-        thr = rng.choice([-0.5, 0.0, 0.35, 0.9])
-        arrow = blocked_cosine_pairs(df, threshold=thr).select(
-            "vec_a", "vec_b", "label", "cos_sim"
-        )
-        a = df.select(F.col("vec_id").alias("vec_a"), "label", F.col("v").alias("va"))
-        b = df.select(F.col("vec_id").alias("vec_b"), "label", F.col("v").alias("vb"))
-        join_form = (
-            a.join(b, "label")
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select(
-                "vec_a", "vec_b", "label",
-                null_cosine(F.col("va"), F.col("vb")).alias("cos_sim"),
+    combos = [
+        (directed, min_cos)
+        for directed in (False, True)
+        for min_cos in (None, -0.5, 0.0, 0.35, 0.9)
+    ]
+    cases = 0
+    for i in range(max(1, N // 30)):
+        for directed, min_cos in combos:
+            dim = rng.choice([3, 8, 64])
+            rows = [_pair_row(j, dim) for j in range(rng.randint(2, 120))]
+            df = spark.createDataFrame(
+                rows, "vec_id long, label long, v array<double>"
             )
-            .filter(F.col("cos_sim") >= thr)
-        )
-        assert (
-            arrow.exceptAll(join_form).count() == 0
-            and join_form.exceptAll(arrow).count() == 0
-        ), (SEED, i, thr, dim, n)
-    print(f"blocked cosine twins: {max(1, N // 6)} cases OK")
+            arrow = pair_dots_arrow(df, directed=directed, min_cos=min_cos).select(
+                F.col("vec_id_a").alias("vec_a"),
+                F.col("vec_id_b").alias("vec_b"),
+                cosine_from_dot(F.col("__dp"), F.col("__na"), F.col("__nb")).alias(
+                    "cos"
+                ),
+            )
+            a = df.select(F.col("vec_id").alias("vec_a"), "label", F.col("v").alias("va"))
+            b = df.select(F.col("vec_id").alias("vec_b"), "label", F.col("v").alias("vb"))
+            join_form = (
+                a.join(b, "label")
+                .filter(
+                    (F.col("vec_a") != F.col("vec_b"))
+                    if directed
+                    else (F.col("vec_a") < F.col("vec_b"))
+                )
+                .select("vec_a", "vec_b", cosine(F.col("va"), F.col("vb")).alias("cos"))
+            )
+            if min_cos is not None:
+                arrow = arrow.filter(F.col("cos") >= min_cos)
+                join_form = join_form.filter(F.col("cos") >= min_cos)
+            got = {(r.vec_a, r.vec_b): repr(r.cos) for r in arrow.collect()}
+            exp = {(r.vec_a, r.vec_b): repr(r.cos) for r in join_form.collect()}
+            assert got == exp, (SEED, i, directed, min_cos, dim, len(rows))
+            cases += 1
+    print(f"pair kernel twins: {cases} cases OK")
 
 
 def fuzz_kmeans_twins(spark) -> None:
@@ -492,7 +520,7 @@ def main() -> None:
     fuzz_simhash_twins(spark)
     fuzz_interval_overlap(spark)
     fuzz_pq_twins(spark)
-    fuzz_blocked_cosine(spark)
+    fuzz_pair_kernel(spark)
     fuzz_kmeans_twins(spark)
     fuzz_pq_train(spark)
     fuzz_event_pattern(spark)
